@@ -12,8 +12,9 @@ workload classes, separating host-hardware effects from plan effects:
 
 Motivation: the N->4N scaling artifact reads raw 0.64-0.70 after the
 r7 speedups while per-stage accounting shows the job's python kernels
-scale FLAT (run-cpu gap 139.7 s at local[2] vs 148.2 s at local[8] on
-the 96k corpus) and the JVM executorCpuTime for identical logical work
+scale FLAT in clean windows (run-cpu gap 131-140 s across the three
+clean ABAB windows on the 96k corpus; a noisy 8-core window read
+199.3 s, OPTIMIZATION_r07.md) and the JVM executorCpuTime for identical logical work
 inflates 88.7 -> 188.4 s.  This probe shows the mechanism is real and
 independent of the plan: allocation-heavy JVM codegen dilates ~1.3x at
 8 concurrent threads on this host while ALU-only codegen and python

@@ -90,9 +90,11 @@ def main():
     # uiWebUrl, not a hard-coded :4040 — Spark walks to the next free
     # port when another session holds the default one
     base = f"{spark.sparkContext.uiWebUrl}/api/v1"
-    appid = json.load(urllib.request.urlopen(f"{base}/applications"))[0]["id"]
+    appid = json.load(urllib.request.urlopen(
+        f"{base}/applications", timeout=30))[0]["id"]
     stages = json.load(urllib.request.urlopen(
-        f"{base}/applications/{appid}/stages?status=complete"))
+        f"{base}/applications/{appid}/stages?status=complete",
+        timeout=30))
 
     def ts(s):
         return datetime.strptime(s, "%Y-%m-%dT%H:%M:%S.%fGMT").replace(
@@ -104,7 +106,8 @@ def main():
     tot_cpu = sum(s.get("executorCpuTime", 0) for s in st) / 1e9
     tot_gc = sum(s["jvmGcTime"] for s in st) / 1000
     print(f"TOTAL runTime {tot_run:.1f}s  cpuTime {tot_cpu:.1f}s  "
-          f"gc {tot_gc:.1f}s  python(run-cpu) {tot_run - tot_cpu:.1f}s")
+          f"gc {tot_gc:.1f}s  "
+          f"non-cpu (python + IO/fetch wait) {tot_run - tot_cpu:.1f}s")
     st.sort(key=lambda s: -s["executorRunTime"])
     for s in st[:12]:
         print(f"stage {s['stageId']:>3} tasks={s['numTasks']:>4} "

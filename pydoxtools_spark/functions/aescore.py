@@ -283,10 +283,6 @@ def _decrypt_block_fast(drk: list[int], block: bytes) -> bytes:
             + o2.to_bytes(4, "big") + o3.to_bytes(4, "big"))
 
 
-def aes_decrypt_block(key: bytes, block: bytes) -> bytes:
-    return _decrypt_block_fast(_inv_round_keys_words(key), block)
-
-
 def cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
     """AES-CBC, NO padding (callers pad; the PDF KDF runs unpadded)."""
     assert len(data) % 16 == 0

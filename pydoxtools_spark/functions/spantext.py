@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import re
 
-from ..constants import PARAGRAPH_SPLIT_REGEX
-
 CELL_SEP = " | "
 ROW_SEP = "\n"
 LIST_ITEM_SEP = "\n"
@@ -32,9 +30,3 @@ def table_to_text(rows: list[list[str]]) -> str:
 
 def list_to_text(items: list[str]) -> str:
     return LIST_ITEM_SEP.join(norm_ws(i) for i in items)
-
-
-def split_paragraphs(text: str) -> list[str]:
-    """Blank-line paragraph split (extract_textstructure.py:72-82)."""
-    parts = re.split(PARAGRAPH_SPLIT_REGEX, text.strip())
-    return [p for p in (p.strip() for p in parts) if p]

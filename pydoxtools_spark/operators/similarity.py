@@ -26,6 +26,8 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import checkpoint, reliable_checkpoints
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -353,7 +355,6 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "weight",
-    checkpoint_dir: str | None = None,
     nodes: DataFrame | None = None,
 ) -> DataFrame:
     """Weighted pagerank over per-graph edge sets (one graph per
@@ -365,8 +366,8 @@ def pagerank(
                              + dangling_mass / N)
     Deterministic (no convergence probe), so no per-round driver logic
     is needed.  Each round's rank table is lineage-truncated (the
-    connected_components pattern: reliable `checkpoint()` when
-    checkpoint_dir is set — survives executor loss — else
+    connected_components pattern, session.checkpoint: reliable when the
+    session has a checkpoint dir — survives executor loss — else
     localCheckpoint): the round's plan references the previous ranks
     TWICE (edge contributions + dangling mass), so without truncation
     the logical plan doubles per round and analysis time explodes
@@ -377,13 +378,7 @@ def pagerank(
     standard distributed-pagerank shape; graphs are independent so skew
     is bounded by the largest single graph (per-doc token graphs:
     thousands of nodes at most)."""
-    spark = edges.sparkSession
-    if checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=True) if checkpoint_dir else (
-            df.localCheckpoint(eager=True))
+    reliable = reliable_checkpoints(edges.sparkSession)
 
     def _pin(df: DataFrame) -> DataFrame:
         """Round-shared tables (ne / nodes) are referenced by EVERY
@@ -393,9 +388,9 @@ def pagerank(
         carries (and Catalyst re-analyzes, and explain re-prints) an
         RDD leaf instead of the whole upstream subtree — measured
         ~1.5-2 s off a cold sf0.1 textrank_summary.  Reliable mode
-        keeps persist(): lineage must stay recomputable for
-        executor-loss recovery there."""
-        return df.persist() if checkpoint_dir else (
+        (session has a checkpoint dir) keeps persist(): lineage must
+        stay recomputable for executor-loss recovery there."""
+        return df.persist() if reliable else (
             df.localCheckpoint(eager=False))
 
     e = edges.select(
@@ -455,7 +450,7 @@ def pagerank(
         "g", "id", "n", "dang", (1.0 / F.col("n")).alias("r"))
     for i in range(iters):
         if i % ckpt_every == 0:
-            ranks = _ckpt(ranks)
+            ranks = checkpoint(ranks)
         contrib = (
             ranks.select("g", F.col("id").alias("src"), "r")
             .join(ne, ["g", "src"])

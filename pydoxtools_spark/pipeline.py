@@ -192,7 +192,7 @@ def _html_kernel(batches):
         yield pd.DataFrame(rows, columns=cols)
 
 
-def _html_branch(spans: DataFrame, parallelism: int) -> DataFrame:
+def _html_branch(spans: DataFrame) -> DataFrame:
     html = spans.filter(F.col("in_kind") == IN_KIND_HTML).select(
         "doc_id", "span_idx", "in_text"
     )
@@ -519,7 +519,7 @@ def extract(
     spark: SparkSession,
     documents_in: DataFrame,
     pdf_elements: DataFrame | None = None,
-    parallelism: int = 32,
+    parallelism: int | None = None,
     page_numbers: list[int] | None = None,
     max_pages: int | None = None,
     table_mode: str = "grid",
@@ -527,7 +527,6 @@ def extract(
     doc_blobs: DataFrame | None = None,
     media_blobs: DataFrame | None = None,
     ocr_model=None,
-    persist_spans: bool = False,
 ) -> DataFrame:
     """documents_in (+ pdf_elements side table, + optional
     pdf_blobs(ref, content binary) for raw-PDF-bytes ingestion, +
@@ -542,7 +541,13 @@ def extract(
 
     table_mode: "grid" (element tables, relational cell assignment) or
     "chars" (full-fidelity word-rebuild/sweep-line/spanning-cell path —
-    requires type='Char' rows; see operators/pdf_relational.py)."""
+    requires type='Char' rows; see operators/pdf_relational.py).
+
+    parallelism: span repartition width; None = the session's
+    defaultParallelism.  Output does not depend on it (span order is
+    fixed by the `tb` total order, not by partitioning)."""
+    if parallelism is None:
+        parallelism = spark.sparkContext.defaultParallelism
     # Statically-absent PDF input -> the pdf branch is skipped outright
     # (r7).  With the old empty-DataFrame default the branch still built
     # the FULL pdf_layout_items machinery over zero rows — its persist()
@@ -582,28 +587,15 @@ def extract(
     spans = explode_input_spans(documents_in).repartition(
         parallelism, "doc_id", "span_idx"
     )
-    if persist_spans:
-        # One-scan mode: materialize the exploded frame once and let
-        # every branch read the cache instead of re-scanning the source
-        # (each branch otherwise keeps its own scan — filters push
-        # below the exchange, so ReuseExchange never fires).  Trade-off
-        # at 100 TB: the cache is ~corpus-sized on executor disk; use
-        # when the source is remote/expensive to re-read, skip when
-        # local storage is the scarcer resource.
-        from pyspark import StorageLevel
-
-        spans = spans.persist(StorageLevel.MEMORY_AND_DISK)
     # Ref-only branches (pdf/image/docx/ocr) never touch span.text:
     # they read through the column-pruned ref explode (scan carries
     # kind+media_ref only — the r2-named 100x mitigation, now code;
-    # A/B at the 96k corpus in BASELINE.md).  In persist_spans mode
-    # the single cached copy is cheaper than any re-scan, so they
-    # share it instead.
-    ref_spans = spans if persist_spans else explode_input_refs(documents_in)
+    # A/B at the 96k corpus in BASELINE.md).
+    ref_spans = explode_input_refs(documents_in)
     out = (
         _text_branch(spans)
         .unionByName(_markdown_branch(spans))
-        .unionByName(_html_branch(spans, parallelism))
+        .unionByName(_html_branch(spans))
         .unionByName(_image_branch(ref_spans))
         .unionByName(_unknown_kind_branch(ref_spans))
         .unionByName(_sentinel_branch(documents_in))
@@ -673,35 +665,6 @@ def extract(
     )
 
 
-# --------------------------------------------------------------- metrics
-
-
-def metrics_for(extracted: DataFrame, run_id: str | None = None,
-                input_snapshot: str | None = None) -> DataFrame:
-    """Per-partition lineage + metrics rows (north rule; FIXTURES.md §5).
-    Pure JVM aggregation over the extracted frame."""
-    run_id = run_id or uuid.uuid4().hex[:12]
-    return (
-        extracted.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("docs_processed"),
-            F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias(
-                "parse_failures"),
-            F.sum(F.size("spans")).alias("span_count"),
-        )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            "partition_id",
-            "docs_processed",
-            "parse_failures",
-            "span_count",
-            F.lit(0).cast("long").alias("elapsed_ms"),
-            F.lit(input_snapshot).alias("input_snapshot"),
-        )
-    )
-
-
 # ------------------------------------------------------------ resumable
 
 
@@ -756,7 +719,7 @@ def run_resumable(
     pdf_elements: DataFrame | None,
     out_dir: str,
     run_id: str | None = None,
-    parallelism: int = 32,
+    parallelism: int | None = None,
     max_pages: int | None = None,
     **extract_kwargs,
 ) -> dict:
@@ -783,7 +746,7 @@ def run_resumable(
 
     **extract_kwargs forward to extract(): pdf_blobs / doc_blobs
     (docx/odt/epub/rtf containers) / media_blobs + ocr_model /
-    table_mode / persist_spans — resumability covers every branch, not
+    table_mode — resumability covers every branch, not
     just the text/html/pdf core.
     """
     from pyspark.sql import Observation
@@ -955,8 +918,7 @@ def pdf_media_blobs(pdf_blobs: DataFrame) -> DataFrame:
 
 def ingest_blobs(spark: SparkSession, blobs: DataFrame,
                  ref_col: str = "ref",
-                 content_col: str = "content",
-                 persist: bool = True) -> dict:
+                 content_col: str = "content") -> dict:
     """Raw (ref, content) blobs -> routed extract() inputs — the
     reference's Document(source=...) experience (document.py:66-113:
     magic/type detection chooses the pipeline) over a distributed blob
@@ -969,22 +931,24 @@ def ingest_blobs(spark: SparkSession, blobs: DataFrame,
                         the text branch (dispatch.doc_type_col)
 
     Returns {"documents_in", "pdf_blobs", "doc_blobs"} ready for
-    extract(**).  Scale shape: magic-prefix dispatch (%PDF-, {\\rtf,
-    PK zip) is a pure-JVM byte comparison on the scan — no shuffle, no
-    Python; ONLY PK-prefixed blobs (the minority needing a central-
-    directory read to tell docx/odt/epub/plain-zip apart) go through
-    the Arrow probe kernel, and only their (ref, kind) pairs join
-    back, so the corpus-sized binary column never re-shuffles.
+    extract(**), plus "routed" (below).  Scale shape: magic-prefix
+    dispatch (%PDF-, {\\rtf, PK zip) is a pure-JVM byte comparison on
+    the scan — no shuffle, no Python; ONLY PK-prefixed blobs (the
+    minority needing a central-directory read to tell docx/odt/epub/
+    plain-zip apart) go through the Arrow probe kernel, and only their
+    (ref, kind) pairs join back, so the corpus-sized binary column
+    never re-shuffles.
 
-    persist=True (default) caches the routed (ref, content, in_kind)
-    frame (MEMORY_AND_DISK): the three returned outputs feed 4-5
-    extract() branches, and WITHOUT the cache every branch re-scans
-    and re-probes the raw source — 29.3 -> 22.3 s on the 3000-file
-    mixed-directory bench (BASELINE.md).  At cluster scale
-    prefer materializing the routed frame to parquet once and running
-    extract() from that (the spark-submit job's two-step shape);
-    persist=False opts out when the caller manages its own
-    materialization."""
+    The routed (ref, content, in_kind) frame is cached
+    (MEMORY_AND_DISK): the three returned outputs feed 4-5 extract()
+    branches, and WITHOUT the cache every branch re-scans and re-probes
+    the raw source — 29.3 -> 22.3 s on the 3000-file mixed-directory
+    bench (BASELINE.md).  The cached frame is returned as "routed":
+    call routed.unpersist() once the consuming extract() has
+    materialized, or repeated calls in a long-lived session accumulate
+    blob-sized cached frames.  At cluster scale prefer materializing
+    the routed frame to parquet once and running extract() from that
+    (the spark-submit job's two-step shape)."""
     from .dispatch import TYPE_HTML, doc_type_col
 
     b = blobs.select(F.col(ref_col).alias("ref"),
@@ -1050,10 +1014,9 @@ def ingest_blobs(spark: SparkSession, blobs: DataFrame,
             F.col("zip_kind").alias("in_kind"),
         )
     )
-    if persist:
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
+    routed = routed.persist(StorageLevel.MEMORY_AND_DISK)
 
     # 'binary' is deliberately NOT in _KNOWN_IN_KINDS: those spans
     # fall through to _unknown_kind_branch's contained error row
@@ -1081,10 +1044,6 @@ def ingest_blobs(spark: SparkSession, blobs: DataFrame,
             F.lit(0).alias("offset"),
         )).alias("spans"),
     )
-    # "routed" is returned so long-lived sessions can release the
-    # cache (routed.unpersist()) once the consuming extract() has
-    # materialized — without a handle, repeated ingest_blobs calls
-    # accumulate blob-sized cached frames (r5 advisor finding)
     return {
         "documents_in": textual_docs.unionByName(binary_docs),
         "pdf_blobs": routed.filter(
@@ -1097,7 +1056,7 @@ def ingest_blobs(spark: SparkSession, blobs: DataFrame,
 
 
 def extract_files(spark: SparkSession, directory: str,
-                  wildcard: str = "*", parallelism: int = 32,
+                  wildcard: str = "*", parallelism: int | None = None,
                   **extract_kwargs) -> DataFrame:
     """One call from a directory of mixed files to extracted spans:
     binaryFile scan -> format probe -> routed extract().  The doc_id
@@ -1105,6 +1064,8 @@ def extract_files(spark: SparkSession, directory: str,
     iterating Document(path) over a folder, distributed."""
     from .sources.loaders import load_directory
 
+    if parallelism is None:
+        parallelism = spark.sparkContext.defaultParallelism
     blobs = load_directory(spark, directory, wildcard=wildcard).select(
         F.col("path").alias("ref"), "content")
     # a directory of small files scans as ~1-file partitions: coalesce

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -62,3 +62,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def reliable_checkpoints(spark: SparkSession) -> bool:
+    """True when the session has a checkpoint dir (`spark.checkpoint.dir`
+    at launch, or SparkContext.setCheckpointDir by the application).
+    The checkpoint dir is the one deployment switch between the two
+    materialization forms; library code reads it and never sets it."""
+    return spark.sparkContext.getCheckpointDir() is not None
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eagerly materialize `df` and truncate its lineage — the one
+    local-vs-reliable decision in the package.  With a checkpoint dir
+    the rows are written there (reliable `checkpoint()`: survives
+    executor loss, the cluster form); without one they stay in executor
+    block storage (`localCheckpoint()`: lineage truncation only, an
+    executor loss forces a restart — the single-retryable-job form)."""
+    if reliable_checkpoints(df.sparkSession):
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

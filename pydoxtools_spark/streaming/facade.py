@@ -23,7 +23,7 @@ def incremental_extract(
     pdf_elements: DataFrame | None,
     out_dir: str,
     checkpoint_dir: str,
-    parallelism: int = 32,
+    parallelism: int | None = None,
     available_now: bool = True,
     **extract_kwargs,
 ):
