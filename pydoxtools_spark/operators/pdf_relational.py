@@ -507,19 +507,25 @@ def _textonly_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
     detection (functions/textonly_tables.detect_text_only_grid); pages
     with graphics belong to the ruled/chars routed kernel and are
     skipped here, so running both ops never double-reports a table."""
+    import numpy as np
+
     from ..functions.spantext import table_to_text
     from ..functions.textonly_tables import detect_text_only_grid
 
+    # numpy column + page-mask walk, as in _page_router_kernel (ascending
+    # p_num, a page's rows in input order — what groupby yielded)
     rows = []
     doc_id = pdf["doc_id"].iloc[0]
-    for p, page in pdf.groupby("p_num"):
-        if (page["type"] == "Graphic").any():
+    p_arr, typ = pdf["p_num"].to_numpy(), pdf["type"].to_numpy()
+    coords = pdf[["x0", "y0", "x1", "y1"]].to_numpy(float)
+    raw = pdf["rawtext"].to_numpy(object)
+    for p in np.unique(p_arr):
+        on_page = p_arr == p
+        t = on_page & (typ == "Text")
+        if (typ[on_page] == "Graphic").any() or np.count_nonzero(t) < 4:
             continue
-        t = page[page["type"] == "Text"]
-        if len(t) < 4:
-            continue
-        boxes = t[["x0", "y0", "x1", "y1"]].to_numpy(float)
-        grid = detect_text_only_grid(boxes, t["rawtext"].tolist())
+        boxes = coords[t]
+        grid = detect_text_only_grid(boxes, raw[t].tolist())
         if grid is None:
             continue
         rows.append(

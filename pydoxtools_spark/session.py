@@ -49,11 +49,12 @@ def get_spark(
         # call-site lines in analyzer error messages, not semantics.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Fork-time preload: the daemon imports numpy/pandas/pyarrow +
-        # the parser modules once, every forked worker inherits them
-        # copy-on-write instead of re-importing (~1 s/worker; measured
-        # ~1 s off a cold blob_routing at sf0.1 and it compounds when
-        # concurrent AQE stages fork extra workers).  The module falls
-        # back to stock pyspark.daemon behavior if any import fails.
+        # every kernel module once (dispatch alone 78 ms) and installs
+        # a stat guard on zipimporter directory re-reads (CLAUDE.md
+        # trap 22: without it every python task re-parsed pyspark.zip,
+        # 0.25-0.85 s/task); forked workers inherit both copy-on-write.
+        # Each step falls back to stock pyspark.daemon behavior if it
+        # fails.
         .config("spark.python.daemon.module",
                 "pydoxtools_spark.daemon_preload")
     )
